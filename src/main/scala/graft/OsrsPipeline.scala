@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   *
   * One driver program, one SparkSession; stage boundaries are DataFrame
   * hand-offs instead of the reference's per-stage OS processes + SQLite
-  * files. The enriched silver frame is cached once and every report is an
-  * independent lazy DAG over it.
+  * files. The enriched silver frames are materialized once and every
+  * report is an independent lazy DAG over them.
   */
 object OsrsPipeline {
 
@@ -104,6 +104,19 @@ object OsrsPipeline {
   /** Full run: raw frame (id, timestamp, raw_content) → map of gold tables.
     * `itemPrices` feeds the as-of value override (empty frame = constants
     * only).
+    *
+    * The two enriched silver frames (broadcasts, chat) are materialized
+    * once, eagerly, by `localCheckpoint`: this call runs the parse jobs,
+    * and every returned table is a lazy plan over those two leaves, so
+    * reports are analyzed and planned over a leaf instead of the whole
+    * parse tree, and the tables can be written concurrently without
+    * racing to fill a shared cache ([[graft.ops.Par]]'s contract).
+    * Truncated lineage has two consequences for callers:
+    *  - the checkpoint blocks live until the caller frees them with
+    *    [[graft.ops.Checkpoints.releaseTree]] over the returned tables,
+    *    once nothing will read them again (else until GC cleans them);
+    *  - losing an executor that holds a block fails any later action on
+    *    the tables instead of recomputing; rerun the pipeline.
     */
   def run(
       raw: DataFrame,
@@ -123,13 +136,13 @@ object OsrsPipeline {
     val chat = Enrichment.applyUsernameMapping(
       parsed.chat, config.mappingRules, Seq("Username"))
 
-    // Every report reads these two frames — cache once, like the
-    // reference's in-memory pandas frames, but spill-safe.
-    broadcasts = broadcasts.cache()
-    val chatCached = chat.cache()
+    // Every report reads these two frames — materialize them once, like
+    // the reference's in-memory pandas frames, but spill-safe.
+    broadcasts = broadcasts.localCheckpoint(eager = true)
+    val silverChat = chat.localCheckpoint(eager = true)
 
     val leaderboardTables = config.leaderboards.map(rc =>
-      rc.reportName -> Reports.leaderboard(chatCached, broadcasts, rc, periods)).toMap
+      rc.reportName -> Reports.leaderboard(silverChat, broadcasts, rc, periods)).toMap
     val detailedTables = config.detailed.flatMap(rc =>
       Reports.detailed(broadcasts, rc, periods)).toMap
     val timeseriesTables = config.timeseries.map(rc =>

@@ -2,6 +2,7 @@ package graft.gold
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import graft.ops.Par
 import org.apache.spark.sql.DataFrame
 
 /** Blue/green gold sink (`/root/reference/src/3_transform_data.py:771-798`,
@@ -31,6 +32,15 @@ class GoldSink(rootDir: String) {
 
   /** Rebuild the standby slot with the given tables, then swap. Returns the
     * directory that now holds the live gold layer.
+    *
+    * The table writes are independent, so they run concurrently through
+    * [[graft.ops.Par.jobs]]; the tables must therefore not share an
+    * unmaterialized upstream frame (`OsrsPipeline.run` builds them on
+    * eagerly checkpointed silver). The blue/green contract is unchanged:
+    * the standby is cleaned first, every write lands before the pointer
+    * moves, and if any write fails its siblings are cancelled, the
+    * exception propagates, and `current` still names the previous,
+    * complete slot.
     */
   def publish(tables: Map[String, DataFrame]): String = {
     val target = standbySlot
@@ -47,9 +57,9 @@ class GoldSink(rootDir: String) {
         .foreach(p => Files.deleteIfExists(p))
     }
     Files.createDirectories(targetDir)
-    tables.foreach { case (name, df) =>
-      df.write.mode("overwrite").parquet(targetDir.resolve(name).toString)
-    }
+    Par.jobs(tables.toSeq.map { case (name, df) =>
+      () => df.write.mode("overwrite").parquet(targetDir.resolve(name).toString)
+    }: _*)
     val tmp = Paths.get(rootDir, "current.tmp")
     Files.writeString(tmp, target)
     Files.move(tmp, pointer, StandardCopyOption.ATOMIC_MOVE,

@@ -23,12 +23,13 @@ import org.apache.spark.sql.functions._
 object TimeSeries {
 
   /** Cumulative sums over the (already gap-free) bucket table WITHOUT a
-    * single-partition window: a running sum partitioned by `year(dateCol)`
-    * plus each year's base offset (the total of all prior years, built by
-    * a years×years triangle join over the per-year aggregate — a handful
-    * of rows, broadcast back). Bucket rows are one-per-bucket, but at a
-    * century of 6h buckets × many frequencies an unpartitioned WindowExec
-    * serializes the whole report; this shape never does.
+    * single-partition window over the buckets: a running sum partitioned
+    * by `year(dateCol)` plus each year's base offset — the total of all
+    * prior years, a running sum over the per-year aggregate (a handful of
+    * rows, so its unpartitioned window is trivial), broadcast back. Bucket
+    * rows are one-per-bucket, but at a century of 6h buckets × many
+    * frequencies an unpartitioned WindowExec over the buckets serializes
+    * the whole report; this shape never does.
     *
     * `sums` maps source column → cumulative output column. Addition is
     * long/decimal exact, so results are bit-identical to the global
@@ -43,14 +44,11 @@ object TimeSeries {
       df.withColumn(dst, sum(col(src)).over(wIn))
     }
     val totalAggs = sums.map { case (src, dst) => sum(col(src)).as(s"__t_$dst") }
-    val yearTotals = withYr.groupBy("__yr")
+    val wPrior = Window.orderBy("__yr").rowsBetween(Window.unboundedPreceding, -1)
+    val bases = withYr.groupBy("__yr")
       .agg(totalAggs.head, totalAggs.tail: _*)
-    val baseAggs = sums.map { case (_, dst) =>
-      sum(col(s"b.__t_$dst")).as(s"__b_$dst") }
-    val bases = yearTotals.alias("a")
-      .join(yearTotals.alias("b"), col("b.__yr") < col("a.__yr"), "left")
-      .groupBy(col("a.__yr").as("__yr"))
-      .agg(baseAggs.head, baseAggs.tail: _*)
+      .select(col("__yr") +: sums.map { case (_, dst) =>
+        sum(col(s"__t_$dst")).over(wPrior).as(s"__b_$dst") }: _*)
     val out = running.join(broadcast(bases), Seq("__yr"))
     sums.foldLeft(out) { case (df, (_, dst)) =>
       df.withColumn(dst, col(dst) + coalesce(col(s"__b_$dst"), lit(0)))
@@ -110,10 +108,9 @@ object TimeSeries {
     * scans run per `chunk` (caller-chosen, MUST be non-decreasing in
     * `dateCol` — e.g. a week or year index), and chunk boundaries are
     * stitched with a tiny per-chunk summary table (first/last observation
-    * per chunk, triangle-joined exactly like [[gapFreeCumulative]]'s base
-    * offsets, then broadcast back). Carried values are the original
-    * doubles — no arithmetic — so the result is bit-identical to the
-    * global-window formulation regardless of chunk granularity.
+    * per chunk, triangle-joined, then broadcast back). Carried values are
+    * the original doubles — no arithmetic — so the result is bit-identical
+    * to the global-window formulation regardless of chunk granularity.
     *
     * `series` columns: `dateCol` (date, distinct) + `valueCol` (double,
     * non-null). Output: dateCol, `valueCol` (filled), `interpolated`

@@ -4,6 +4,7 @@ import java.time.ZonedDateTime
 
 import graft.OsrsPipeline
 import graft.gold.GoldSink
+import graft.ops.Checkpoints
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 
@@ -62,6 +63,14 @@ class StreamingOsrsGold(
     * slot (torn report set goes live), or finish a rebuild of OLDER
     * state last and overwrite the newer published gold until the next
     * trigger.
+    *
+    * The rebuild materializes silver once ([[OsrsPipeline.run]]) and
+    * [[GoldSink.publish]] writes the tables concurrently over it. The
+    * silver checkpoint blocks are released once publish returns or
+    * throws, so a long-lived stream holds no block from earlier ticks.
+    * Their lineage is truncated: losing an executor mid-publish fails
+    * the tick rather than recomputing, `current` keeps the previous
+    * gold, and the stream's replay of the same batch re-runs the tick.
     */
   def applyBatch(batch: DataFrame, batchId: Long): Unit =
     rawStore.withWriteLock {
@@ -69,7 +78,8 @@ class StreamingOsrsGold(
       rawStore.read(batch.sparkSession).foreach { stored =>
         val raw = stored.select("id", "timestamp", "raw_content")
         val tables = OsrsPipeline.run(raw, runTime, config)
-        sink.publish(tableNames.map(n => n -> tables(n)).toMap)
+        try sink.publish(tableNames.map(n => n -> tables(n)).toMap)
+        finally tables.values.foreach(Checkpoints.releaseTree)
       }
     }
 

@@ -92,4 +92,18 @@ class StreamingOsrsGoldSpec extends AnyFunSuite with SparkTestBase {
     assert(canon(gold.readTable(spark, "valuable_drops_summary").get) == live)
     assert(gold.rawStore.read(spark).get.count() == 4L)
   }
+
+  test("repeated applyBatch leaves no silver checkpoint blocks behind") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_sosrs3").toString
+    val gold = new StreamingOsrsGold(root, runTime)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    Seq(batch1, batch2, batch1 ++ batch2).zipWithIndex.foreach { case (b, i) =>
+      gold.applyBatch(b.toDF("id", "timestamp", "raw_content"), batchId = i.toLong)
+    }
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+      s"persistent RDDs left: ${sc.getPersistentRDDs.keySet -- before}")
+    assert(canon(gold.readTable(spark, "valuable_drops_summary").get).nonEmpty)
+  }
 }
